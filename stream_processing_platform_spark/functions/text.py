@@ -160,12 +160,6 @@ def lang_id(text: Column, langs: tuple[str, ...] = LANG_DEFAULT) -> Column:
 STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "it", "on", "for")
 
 
-def stopword_ratio(text: Column) -> Column:
-    toks = tokens(text)
-    sw = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
-    return F.when(F.size(toks) > 0, sw / F.size(toks)).otherwise(F.lit(0.0))
-
-
 def quality_score(text: Column) -> Column:
     """Composite quality heuristic in [0, 1]:
 
@@ -219,55 +213,26 @@ WINNOW_HASH_M = 2199023255531
 WINNOW_HASH_B = 131
 
 
-def _poly_gram_hash(codes: Column, j: Column, k: int) -> Column:
-    """Hash of the k-char gram starting at 0-based position ``j`` of the
-    codepoint array: chars past the end contribute 0 (matching the
-    clipped-slice semantics both engines apply to short docs)."""
-    powers = [pow(WINNOW_HASH_B, k - 1 - i, WINNOW_HASH_M) for i in range(k)]
-    terms = [
-        (F.coalesce(F.get(codes, j + i), F.lit(0)) * F.lit(powers[i])) % WINNOW_HASH_M
-        for i in range(k)
-    ]
-    acc = terms[0]
-    for t in terms[1:]:
-        acc = acc + t
-    return acc % WINNOW_HASH_M
-
-
-def winnow_fingerprints_expr(text: Column, k: int = 12, w: int = 6) -> Column:
-    """Declarative (all-JVM HOF) form of :func:`winnow_fingerprints` —
-    the reference semantics, kept as the cross-implementation pin (a
-    pytest asserts the Arrow path below produces identical prints).
-    Not the bench path: Catalyst evaluates HOF lambda bodies
-    INTERPRETED per element, so the 12 gets + mods per position here
-    cost more than one md5 call did — measured 7.5 s vs the Arrow
-    path's sub-second at sf0.1.
-
-    Codepoint extraction is `ascii(substr(...))`, which equals duckdb's
-    `unicode(...)` for the full unicode range (verified incl. non-BMP),
-    though positions count UTF-16 units on the JVM — identical on the
-    BMP text this pipeline normalizes."""
-    return let(
-        normalize_text(text),
-        lambda norm: let(
-            let(
-                F.when(F.length(norm) > 0, F.transform(
-                    F.sequence(F.lit(1), F.length(norm)),
-                    lambda i: F.ascii(norm.substr(i, F.lit(1))).cast("long"),
-                )).otherwise(F.array().cast("array<long>")),
-                lambda codes: F.transform(
-                    F.sequence(F.lit(0), F.greatest(F.length(norm) - k, F.lit(0))),
-                    lambda j: _poly_gram_hash(codes, j, k),
-                ),
-            ),
-            lambda hashes: F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.greatest(F.size(hashes) - (w - 1), F.lit(1))),
-                    lambda j: F.array_min(F.slice(hashes, j, w)),
-                )
-            ),
-        ),
+def _gram_powers(k: int):
+    return np.array(
+        [pow(WINNOW_HASH_B, k - 1 - i, WINNOW_HASH_M) for i in range(k)],
+        dtype=np.uint64,
     )
+
+
+def _gram_hash_array(s: str | None, powers, k: int):
+    """uint64 polynomial hashes of every k-char gram of ``s`` (chars past
+    the end count 0; a string shorter than k still yields one gram).
+    Codepoints come from one utf-32 decode — exact, matching duckdb's
+    unicode()."""
+    codes = np.frombuffer((s or "").encode("utf-32-le"), dtype="<u4")
+    g = max(len(codes) - k + 1, 1)
+    padded = np.concatenate([codes.astype(np.uint64), np.zeros(k, dtype=np.uint64)])
+    h = np.zeros(g, dtype=np.uint64)
+    m = np.uint64(WINNOW_HASH_M)
+    for i in range(k):
+        h = (h + (padded[i : i + g] * powers[i]) % m) % m
+    return h
 
 
 def winnow_fingerprints(text: Column, k: int = 12, w: int = 6) -> Column:
@@ -289,54 +254,22 @@ def winnow_fingerprints(text: Column, k: int = 12, w: int = 6) -> Column:
     instead of interpreted-per-element HOF lambdas (7.5 s → <1 s at
     sf0.1) or per-gram md5 digests (6.7 s). uint64 bounds: codepoint
     (<2^21) × power (<2^41) < 2^62, per-term mod keeps sums < 2^45.
-    Partition-parallel, zero shuffle — the same scale shape as the
-    declarative twin."""
+    Partition-parallel, zero shuffle. The expression twin in
+    ``tests/twin_refs.py`` pins the values exactly."""
     from pyspark.sql.types import ArrayType, LongType
 
-    powers = np.array(
-        [pow(WINNOW_HASH_B, k - 1 - i, WINNOW_HASH_M) for i in range(k)],
-        dtype=np.uint64,
-    )
+    powers = _gram_powers(k)
 
     @F.pandas_udf(ArrayType(LongType()))
     def _winnow(texts: pd.Series) -> pd.Series:
         out = []
         for s in texts:
-            codes = np.frombuffer((s or "").encode("utf-32-le"), dtype="<u4")
-            n = len(codes)
-            g = max(n - k + 1, 1)
-            padded = np.concatenate(
-                [codes.astype(np.uint64), np.zeros(k, dtype=np.uint64)]
-            )
-            h = np.zeros(g, dtype=np.uint64)
-            m = np.uint64(WINNOW_HASH_M)
-            for i in range(k):
-                h = (h + (padded[i : i + g] * powers[i]) % m) % m
-            wl = min(w, g)
-            mins = np.lib.stride_tricks.sliding_window_view(h, wl).min(axis=1)
+            h = _gram_hash_array(s, powers, k)
+            mins = np.lib.stride_tricks.sliding_window_view(h, min(w, len(h))).min(axis=1)
             out.append(np.unique(mins).astype(np.int64))
         return pd.Series(out)
 
     return _winnow(normalize_text(text))
-
-
-def gram_hashes_expr(text: Column, k: int) -> Column:
-    """Declarative twin of :func:`gram_hashes` (the per-position stage of
-    :func:`winnow_fingerprints_expr` without the window minima) — kept as
-    the cross-implementation pin; not the bench path (interpreted HOF)."""
-    return let(
-        normalize_text(text),
-        lambda norm: let(
-            F.when(F.length(norm) > 0, F.transform(
-                F.sequence(F.lit(1), F.length(norm)),
-                lambda i: F.ascii(norm.substr(i, F.lit(1))).cast("long"),
-            )).otherwise(F.array().cast("array<long>")),
-            lambda codes: F.transform(
-                F.sequence(F.lit(0), F.greatest(F.length(norm) - k, F.lit(0))),
-                lambda j: _poly_gram_hash(codes, j, k),
-            ),
-        ),
-    )
 
 
 def gram_hashes(text: Column, k: int) -> Column:
@@ -350,27 +283,11 @@ def gram_hashes(text: Column, k: int) -> Column:
     fingerprint set). duckdb reproduces the values bit-for-bit."""
     from pyspark.sql.types import ArrayType, LongType
 
-    powers = np.array(
-        [pow(WINNOW_HASH_B, k - 1 - i, WINNOW_HASH_M) for i in range(k)],
-        dtype=np.uint64,
-    )
+    powers = _gram_powers(k)
 
     @F.pandas_udf(ArrayType(LongType()))
     def _hashes(texts: pd.Series) -> pd.Series:
-        out = []
-        for s in texts:
-            codes = np.frombuffer((s or "").encode("utf-32-le"), dtype="<u4")
-            n = len(codes)
-            g = max(n - k + 1, 1)
-            padded = np.concatenate(
-                [codes.astype(np.uint64), np.zeros(k, dtype=np.uint64)]
-            )
-            h = np.zeros(g, dtype=np.uint64)
-            m = np.uint64(WINNOW_HASH_M)
-            for i in range(k):
-                h = (h + (padded[i : i + g] * powers[i]) % m) % m
-            out.append(h.astype(np.int64))
-        return pd.Series(out)
+        return pd.Series([_gram_hash_array(s, powers, k).astype(np.int64) for s in texts])
 
     return _hashes(normalize_text(text))
 

@@ -26,11 +26,11 @@ def _stack_checked(pdf, id_name: str, vec_name: str, dim: int):
 
     A bare ``np.stack`` over a batch containing a NULL vector or one of
     the wrong length dies with an opaque numpy shape error deep in an
-    executor. The LSH sigrun path masks such rows because its expression
-    twin defines all-zero semantics for them; the Arrow assignment /
-    encoding twins here have NO defined degradation (their expression
-    twins produce murky null-ordering artifacts), so the contract is a
-    loud, named error: fix or filter upstream."""
+    executor. The LSH signature stage masks such rows because its
+    expression twin defines all-zero semantics for them; the
+    assignment / encoding stages here have NO defined degradation (their
+    expression twins produce murky null-ordering artifacts), so the
+    contract is a loud, named error: fix or filter upstream."""
     import numpy as np
 
     arrs = pdf[vec_name].to_numpy()
@@ -249,92 +249,65 @@ def _encode_codes(
     id_name: str,
     vec_name: str,
     codebook: DataFrame,
-    dim: int,
-    num_subspaces: int,
     normalize: bool,
-    encode: str = "arrow",
 ) -> DataFrame:
     """PQ-encode every vector: one code per subspace, argmin L2 against
-    the broadcast codebook. Output: (id_name, codes array<int>).
+    the codebook. Output: (id_name, codes array<int>).
 
-    ``encode="arrow"`` (default) collects the tiny (M x K x d) codebook
-    to the driver and encodes each Arrow batch as one einsum in
-    ``clustering._pq_assign_udf`` — the expression form explodes
-    rows x subspaces, joins the codebook, and re-aggregates: a
-    rows x subspaces x codes intermediate whose interpreted per-element
-    L2 folds dominated q_ann_pq at sf0.1 (measured ~2x on the full
-    query). Same argmin, same lowest-code tie-break (np.argmin takes
-    the first minimum; codes are index-ordered); the admitted
-    pairwise-vs-sequential summation delta only moves fp-noise ties —
-    the expression twin is pinned code-for-code equal by pytest.
-    ``normalize`` applies l2 normalization inside the encoder (the raw
-    PQ form); residual vectors pass normalize=False."""
-    if encode == "arrow":
-        import numpy as np
-        import pandas as pd
+    Collects the tiny (M x K x d) codebook to the driver and encodes
+    each Arrow batch as one einsum — the expression form
+    (``tests/twin_refs.py``) explodes rows x subspaces, joins the
+    codebook, and re-aggregates: a rows x subspaces x codes
+    intermediate whose interpreted per-element L2 folds dominated
+    q_ann_pq at sf0.1 (measured ~2x on the full query). Same argmin,
+    same lowest-code tie-break (np.argmin takes the first minimum;
+    codes are index-ordered); the admitted pairwise-vs-sequential
+    summation delta only moves fp-noise ties — the expression twin is
+    pinned code-for-code equal by pytest. ``normalize`` applies l2
+    normalization inside the encoder (the raw PQ form); residual
+    vectors pass normalize=False."""
+    import numpy as np
+    import pandas as pd
 
-        rows = codebook.select("m", "code", "csub").collect()  # bounded: M x K x d
-        M = 1 + max(r["m"] for r in rows)
-        K = 1 + max(r["code"] for r in rows)
-        d = len(rows[0]["csub"])
-        CB = np.zeros((M, K, d), dtype=np.float64)
-        for r in rows:
-            CB[r["m"], r["code"]] = r["csub"]
-        cb_sq = (CB * CB).sum(axis=2)  # (M, K)
-        id_type = dict(df.dtypes)[id_name]
-        schema = f"{id_name} {id_type}, codes array<int>"
+    rows = codebook.select("m", "code", "csub").collect()  # bounded: M x K x d
+    M = 1 + max(r["m"] for r in rows)
+    K = 1 + max(r["code"] for r in rows)
+    d = len(rows[0]["csub"])
+    CB = np.zeros((M, K, d), dtype=np.float64)
+    for r in rows:
+        CB[r["m"], r["code"]] = r["csub"]
+    cb_sq = (CB * CB).sum(axis=2)  # (M, K)
+    id_type = dict(df.dtypes)[id_name]
+    schema = f"{id_name} {id_type}, codes array<int>"
 
-        # mapInPandas, not a pandas_udf projection: the residual input
-        # column is itself a zip_with expression, and Catalyst collapses
-        # a UDF projection into downstream join/aggregate operators
-        # where PythonUDF extraction fails (Cannot evaluate expression:
-        # encode(...)) — an operator node is immune, same lesson as
-        # _sem_members_arrow.
-        def run(batches):
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
-                    continue
-                X = _stack_checked(pdf, id_name, vec_name, M * d)
-                if normalize:
-                    X = X / np.linalg.norm(X, axis=1, keepdims=True)
-                S = X.reshape(n, M, d)
-                cross = np.einsum("nmd,mkd->nmk", S, CB)
-                dist = (S * S).sum(axis=2)[:, :, None] - 2.0 * cross + cb_sq[None, :, :]
-                # rounded BEFORE the argmin (r9): the winning code is a
-                # function of the 1e-6-rounded distance, so the einsum's
-                # summation-order noise vs the expression fold can only
-                # matter on a boundary — the accepted Arrow-twin
-                # exception (pinned code-for-code by pytest), and what
-                # makes the duckdb PQ oracle's argmin reproduce this one.
-                dist = np.floor(dist * 1e6 + 0.5)
-                codes = dist.argmin(axis=2).astype("int32")
-                yield pd.DataFrame(
-                    {id_name: pdf[id_name].to_numpy(), "codes": list(codes)}
-                )
+    # mapInPandas, not a pandas_udf projection: the residual input
+    # column is itself a zip_with expression, and Catalyst collapses a
+    # UDF projection into downstream join/aggregate operators where
+    # PythonUDF extraction fails (Cannot evaluate expression:
+    # encode(...)) — an operator node is immune, same lesson as
+    # dedup._sem_members.
+    def run(batches):
+        for pdf in batches:
+            n = len(pdf)
+            if n == 0:
+                continue
+            X = _stack_checked(pdf, id_name, vec_name, M * d)
+            if normalize:
+                X = X / np.linalg.norm(X, axis=1, keepdims=True)
+            S = X.reshape(n, M, d)
+            cross = np.einsum("nmd,mkd->nmk", S, CB)
+            dist = (S * S).sum(axis=2)[:, :, None] - 2.0 * cross + cb_sq[None, :, :]
+            # rounded BEFORE the argmin (r9): the winning code is a
+            # function of the 1e-6-rounded distance, so the einsum's
+            # summation-order noise vs the expression fold can only
+            # matter on a boundary — the accepted Arrow-twin exception
+            # (pinned code-for-code by pytest), and what makes the
+            # duckdb PQ oracle's argmin reproduce this one.
+            dist = np.floor(dist * 1e6 + 0.5)
+            codes = dist.argmin(axis=2).astype("int32")
+            yield pd.DataFrame({id_name: pdf[id_name].to_numpy(), "codes": list(codes)})
 
-        return df.select(F.col(id_name), F.col(vec_name)).mapInPandas(run, schema)
-
-    vec = _l2_normalized(F.col(vec_name)) if normalize else F.col(vec_name)
-    subs = df.select(
-        id_name, F.posexplode(_subvectors(vec, dim, num_subspaces)).alias("m", "sub")
-    )
-    # argmin as min(struct(dist, code)) — struct ordering is (dist asc,
-    # code asc), so the result is deterministic AND the aggregate
-    # partials combine map-side; a window-rank argmin would shuffle and
-    # sort the full N x subspaces x codes expansion instead.
-    return (
-        subs.join(F.broadcast(codebook), "m")
-        .withColumn("_d", F.floor(_l2sq(F.col("sub"), F.col("csub")) * 1e6 + F.lit(0.5)))
-        .groupBy(id_name, "m")
-        .agg(F.min(F.struct("_d", "code"))["code"].alias("code"))
-        .groupBy(id_name)
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("m", "code"))), lambda s: s["code"]
-            ).alias("codes")
-        )
-    )
+    return df.select(F.col(id_name), F.col(vec_name)).mapInPandas(run, schema)
 
 
 def _assign_cells(
@@ -343,84 +316,62 @@ def _assign_cells(
     id_name: str = "cid",
     vec_name: str = "_cv",
     keep_vec: bool = False,
-    assign: str = "arrow",
 ) -> DataFrame:
     """Nearest-centroid cell per corpus vector (max cosine, lowest-cell
     tie-break). Output: (cell, id_name[, vec_name]).
 
-    ``assign="arrow"`` (default) computes all cells per Arrow batch as
-    one normalized matmul argmax in mapInPandas — the expression form
+    Computes all cells per Arrow batch as one normalized matmul argmax
+    in mapInPandas — the expression form (``tests/twin_refs.py``)
     crossJoins the broadcast centroids and folds an interpreted cosine
     per (row x cell) expansion row. Same tie-break (cells index-sorted,
     np.argmax takes the first maximum); fp-noise ties are the only
     divergence channel and the expression twin is pinned row-for-row
     equal by pytest (same doctrine as _encode_codes)."""
-    if assign == "arrow":
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        rows = sorted(
-            centroids.select("cell", "_centroid").collect(),  # bounded: k x dim
-            key=lambda r: r["cell"],
-        )
-        cells = np.array([r["cell"] for r in rows], dtype=np.int64)
-        vecs = [r["_centroid"] for r in rows]
-        dim = next((len(v) for v in vecs if v is not None), 0)
-        bad = [i for i, v in enumerate(vecs) if v is None or len(v) != dim]
-        if bad:
-            raise ValueError(
-                f"IVF centroid rows {bad} have NULL or non-{dim}-dim vectors "
-                f"(the sampled corpus rows must be valid embeddings)"
-            )
-        C = np.ascontiguousarray(vecs, dtype=np.float64)
-        Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-        id_type = dict(c.dtypes)[id_name]
-        out_cols = f"cell int, {id_name} {id_type}" + (
-            f", {vec_name} array<double>" if keep_vec else ""
-        )
-
-        def run(batches):
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
-                    continue
-                X = _stack_checked(pdf, id_name, vec_name, C.shape[1])
-                sims = (X / np.linalg.norm(X, axis=1, keepdims=True)) @ Cn.T
-                # rounded BEFORE the argmax (r9): the winning cell is a
-                # function of the 1e-6-rounded similarity, so the matmul's
-                # pairwise-sum noise vs the fold (~1e-15) can only matter
-                # exactly on a boundary — the accepted Arrow-twin
-                # exception, and what makes the duckdb IVF oracle's
-                # argmax reproduce this one. np.argmax takes the first
-                # max: lowest cell, same as min(struct(-sim, cell)).
-                sims = np.floor(sims * 1e6 + 0.5) / 1e6
-                cell = cells[sims.argmax(axis=1)].astype("int32")
-                data = {"cell": cell, id_name: pdf[id_name].to_numpy()}
-                if keep_vec:
-                    data[vec_name] = list(X)
-                yield pd.DataFrame(data)
-
-        return c.select(F.col(id_name), F.col(vec_name)).mapInPandas(run, out_cols)
-
-    # argmax as min(struct(-sim, cell)) — (sim desc, cell asc)
-    # determinism preserved, and the aggregate combines map-side instead
-    # of sorting the N x num_cells expansion through a rank window. The
-    # vector rides along via first(): every expansion row of an id
-    # carries the identical vector, so first() is value-deterministic.
-    aggs = [
-        F.min(F.struct((-F.col("_sim")).alias("_neg"), F.col("cell")))["cell"].alias("cell")
-    ]
-    if keep_vec:
-        aggs.append(F.first(vec_name).alias(vec_name))
-    rounded = F.floor(cosine(F.col(vec_name), F.col("_centroid")) * 1e6 + F.lit(0.5)) / 1e6
-    out = (
-        c.crossJoin(F.broadcast(centroids))
-        .withColumn("_sim", rounded)
-        .groupBy(id_name)
-        .agg(*aggs)
+    rows = sorted(
+        centroids.select("cell", "_centroid").collect(),  # bounded: k x dim
+        key=lambda r: r["cell"],
     )
-    cols = ["cell", id_name] + ([vec_name] if keep_vec else [])
-    return out.select(*cols)
+    cells = np.array([r["cell"] for r in rows], dtype=np.int64)
+    vecs = [r["_centroid"] for r in rows]
+    dim = next((len(v) for v in vecs if v is not None), 0)
+    bad = [i for i, v in enumerate(vecs) if v is None or len(v) != dim]
+    if bad:
+        raise ValueError(
+            f"IVF centroid rows {bad} have NULL or non-{dim}-dim vectors "
+            f"(the sampled corpus rows must be valid embeddings)"
+        )
+    C = np.ascontiguousarray(vecs, dtype=np.float64)
+    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+    id_type = dict(c.dtypes)[id_name]
+    out_cols = f"cell int, {id_name} {id_type}" + (
+        f", {vec_name} array<double>" if keep_vec else ""
+    )
+
+    def run(batches):
+        for pdf in batches:
+            n = len(pdf)
+            if n == 0:
+                continue
+            X = _stack_checked(pdf, id_name, vec_name, C.shape[1])
+            sims = (X / np.linalg.norm(X, axis=1, keepdims=True)) @ Cn.T
+            # rounded BEFORE the argmax (r9): the winning cell is a
+            # function of the 1e-6-rounded similarity, so the matmul's
+            # pairwise-sum noise vs the fold (~1e-15) can only matter
+            # exactly on a boundary — the accepted Arrow-twin exception,
+            # and what makes the duckdb IVF oracle's argmax reproduce
+            # this one. np.argmax takes the first max: lowest cell, same
+            # as min(struct(-sim, cell)).
+            sims = np.floor(sims * 1e6 + 0.5) / 1e6
+            cell = cells[sims.argmax(axis=1)].astype("int32")
+            data = {"cell": cell, id_name: pdf[id_name].to_numpy()}
+            if keep_vec:
+                data[vec_name] = list(X)
+            yield pd.DataFrame(data)
+
+    return c.select(F.col(id_name), F.col(vec_name)).mapInPandas(run, out_cols)
 
 
 def pq_topk(
@@ -468,9 +419,7 @@ def pq_topk(
 
     # Encode: nearest code per (vector, subspace) — Arrow einsum path,
     # expression twin pinned equal (see _encode_codes).
-    encoded = _encode_codes(
-        c, "neighbor_id", "_cv", codebook, dim, num_subspaces, normalize=True
-    )
+    encoded = _encode_codes(c, "neighbor_id", "_cv", codebook, normalize=True)
 
     # Per-query ADC table: dtable[m][code] = L2^2(q_sub_m, code vector),
     # on the 1e-6 INTEGER grid (r9): integer table entries make the
@@ -661,14 +610,10 @@ def ivfpq_topk(
                     ),
                 )
             )
-        encoded = _encode_codes(
-            rres, "neighbor_id", "_rv", codebook, dim, num_subspaces, normalize=False
-        )
+        encoded = _encode_codes(rres, "neighbor_id", "_rv", codebook, normalize=False)
     else:
         codebook = _pq_codebook(cn, dim, num_subspaces, num_codes, train_iters)
-        encoded = _encode_codes(
-            cn, "neighbor_id", "_cv", codebook, dim, num_subspaces, normalize=True
-        )
+        encoded = _encode_codes(cn, "neighbor_id", "_cv", codebook, normalize=True)
 
     # the index table: (neighbor_id, cell, codes) — corpus-keyed join,
     # built once (precomputed and reused at production scale)

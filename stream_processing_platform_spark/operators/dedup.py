@@ -10,8 +10,11 @@ Scale design:
 - Everything is shuffle-bounded by LSH buckets or group keys — never an
   all-pairs cross join. Brute-force pair generation exists only inside a
   bucket/group.
-- MinHash signatures and SimHash bits are computed with JVM higher-order
-  functions (xxhash64-based), zero Python in the hot path.
+- MinHash signatures are computed with JVM higher-order functions
+  (xxhash64-based), zero Python in the hot path. The SimHash and
+  hyperplane-LSH signatures and the SemDeDup cluster assignment run as
+  Arrow-batched numpy stages (mapInPandas), each pinned by pytest to
+  its expression twin in ``tests/twin_refs.py``.
 - Candidate pairs are always verified with the exact measure, so LSH
   parameters only affect recall, not precision.
 """
@@ -369,64 +372,23 @@ def simhash_mixers(num_bits: int = 64, seed: int = 0x51A5) -> list[tuple[int, in
     ]
 
 
-def simhash_bits(toks: Column, num_bits: int = 64) -> Column:
-    """SimHash as a bit array: bit i is 1 when the sum over tokens of ±1
-    is positive, where token t votes ``+1`` iff
-    ``((a_i·h(t) + b_i) mod p)·2 < p`` with ``h(t)`` the first 15 md5
-    hex digits of t as an integer, mod p. One md5 per token (hoisted,
-    let-bound); per (token, bit) work is a multiply-add-mod — cheaper
-    than the per-(token, bit) xxhash64 this replaces, and exactly
-    reproducible in ANSI SQL (duckdb ``('0x' || substr(md5(t),1,15))
-    ::BIGINT``), so the operator carries a full cross-engine oracle.
-
-    The mixer constants ride as one array-of-struct literal; the
-    per-bit lambda references its ELEMENT (no literal re-splice per
-    token — the expression-tree caveat in CLAUDE.md)."""
-    from stream_processing_platform_spark.functions.text import let
-
-    mixers = simhash_mixers(num_bits)
-    M = F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in mixers
-        ]
-    )
-
-    def body(hs: Column) -> Column:
-        return F.transform(
-            M,
-            lambda m: F.when(
-                F.aggregate(
-                    hs,
-                    F.lit(0),
-                    lambda acc, h: acc
-                    + F.when(
-                        ((m["a"] * h + m["b"]) % SIMHASH_P) * 2 < SIMHASH_P, 1
-                    ).otherwise(-1),
-                )
-                > 0,
-                1,
-            ).otherwise(0),
-        )
-
-    hs = F.transform(
-        toks,
-        lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long") % SIMHASH_P,
-    )
-    return let(hs, body)
-
-
 def _simhash_bits_arrow(
     df: DataFrame, id_col: str, text_col: str, num_bits: int
 ) -> DataFrame:
-    """Arrow twin of :func:`simhash_bits`: per batch, tokenize + md5 in
-    one Python pass and run all (token × bit) mixers as one numpy
-    matrix op. Unlike the float Arrow twins (semdedup/PQ/IVF), this one
-    is EXACTLY bit-identical to the expression form — every op is int64
-    arithmetic (a·h < 2^62, no overflow, no summation-order channel) —
-    and the pytest pin asserts full equality, not closeness. Replaces a
-    per-(token, bit) interpreted HOF that cost 3.9 s at sf0.1 (the
-    md5-vs-HOF lesson from the winnow family, CLAUDE.md). Tokenization
+    """SimHash fingerprints: bit i is 1 when the sum over tokens of ±1
+    is positive, where token t votes ``+1`` iff
+    ``((a_i·h(t) + b_i) mod p)·2 < p`` with ``h(t)`` the first 15 md5
+    hex digits of t as an integer, mod p — exactly reproducible in ANSI
+    SQL (duckdb ``('0x' || substr(md5(t),1,15))::BIGINT``), so the
+    operator carries a full cross-engine oracle.
+
+    Per batch, tokenize + md5 in one Python pass and run all (token ×
+    bit) mixers as one numpy matrix op. Every op is int64 arithmetic
+    (a·h < 2^62, no overflow, no summation-order channel), so the
+    output is EXACTLY equal to the expression form in
+    ``tests/twin_refs.py`` (pytest-pinned) — which cost 3.9 s at sf0.1
+    as a per-(token, bit) interpreted HOF (the md5-vs-HOF lesson from
+    the winnow family, CLAUDE.md). Tokenization
     mirrors functions.text.tokens: Java regex \\s is the ASCII class
     [ \\t\\n\\x0b\\f\\r], NOT Python's unicode \\s — split on exactly
     that class. Output: (_id, _hi, _lo) — the fingerprint packed into
@@ -490,18 +452,13 @@ def simhash_pairs(
     max_hamming: int = 3,
     bands: int = 4,
     num_bits: int = 64,
-    signature: str = "arrow",
 ) -> DataFrame:
-    """SimHash near-dup: 64-bit fingerprints, banded into ``bands`` chunks
-    (pigeonhole: hamming ≤ bands-1 guarantees a shared chunk; for
-    max_hamming ≥ bands it is approximate), verified with exact hamming
-    distance. Candidates only meet inside a (band, chunk) bucket — no
-    all-pairs shuffle. ``signature="arrow"`` (default) computes the
-    fingerprints via :func:`_simhash_bits_arrow` (bit-identical, pytest-
-    pinned); ``"expr"`` keeps the pure expression form — the fallback
-    switch if a boundary mismatch ever fires. Output: id_a, id_b,
-    hamming."""
-    from stream_processing_platform_spark.functions.text import tokens as tok_fn
+    """SimHash near-dup: 64-bit fingerprints (:func:`_simhash_bits_arrow`),
+    banded into ``bands`` chunks (pigeonhole: hamming ≤ bands-1
+    guarantees a shared chunk; for max_hamming ≥ bands it is
+    approximate), verified with exact hamming distance. Candidates only
+    meet inside a (band, chunk) bucket — no all-pairs shuffle. Output:
+    id_a, id_b, hamming."""
     from stream_processing_platform_spark.partitioning import ensure_min_parallelism
 
     df = ensure_min_parallelism(df)
@@ -512,18 +469,7 @@ def simhash_pairs(
             f"bands={bands} must split each {half}-bit fingerprint half into "
             f"whole chunks (num_bits={num_bits})"
         )
-    if signature == "arrow":
-        fp = _simhash_bits_arrow(df, id_col, text_col, num_bits)
-    else:
-        bits = simhash_bits(tok_fn(F.col(text_col)), num_bits)
-        pack = lambda lohi: F.aggregate(  # noqa: E731 — acc*2 + bit fold
-            lohi, F.lit(0).cast("long"), lambda acc, bit: acc * 2 + bit
-        )
-        fp = df.select(F.col(id_col).alias("_id"), bits.alias("_bits")).select(
-            "_id",
-            pack(F.slice(F.col("_bits"), 1, half)).alias("_hi"),
-            pack(F.slice(F.col("_bits"), half + 1, half)).alias("_lo"),
-        )
+    fp = _simhash_bits_arrow(df, id_col, text_col, num_bits)
     # Band chunks shift+mask straight out of the packed halves — no
     # per-bit work survives past the signature stage.
     mask = (1 << width) - 1
@@ -676,6 +622,29 @@ def substring_dup_spans(
     )
 
 
+def _lsh_planes(df: DataFrame, vec_col: str, num_bits: int, seed: int):
+    """Seeded Rademacher (±1) hyperplanes, shape (num_bits, dims).
+
+    One 1-row job learns the dimensionality (embedding columns are
+    fixed-width; any NON-EMPTY row serves — a leading null/empty vector
+    must not shrink the matrix to 1 dim, or every signature collapses
+    and LSH degrades to near-all-pairs candidates). All-empty input
+    degrades to a trivial 1-dim matrix — the pipeline then yields zero
+    pairs instead of crashing at plan build."""
+    import numpy as np
+
+    from stream_processing_platform_spark.functions.similarity import as_double_array
+
+    head = (
+        df.select(F.size(as_double_array(F.col(vec_col))).alias("n"))
+        .where(F.col("n") > 0)
+        .head()
+    )
+    dims = head["n"] if head is not None else 1
+    rng = np.random.default_rng(seed)
+    return np.where(rng.standard_normal((num_bits, dims)) > 0, 1.0, -1.0)
+
+
 def hyperplane_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -684,7 +653,6 @@ def hyperplane_lsh_pairs(
     num_bits: int = 192,
     bands: int = 12,
     seed: int = 0x5EED,
-    signature: str = "arrow",
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via random-hyperplane (sign) LSH —
     the 100 TB scale path (SRP-LSH, Charikar 2002: P(bits agree) =
@@ -699,17 +667,18 @@ def hyperplane_lsh_pairs(
     band with p≈1.5e-5, so candidate volume stays near-linear.
 
     The hyperplanes are Rademacher (±1) vectors sampled once on the
-    driver from a seeded RNG and embedded as ONE parsed SQL array
-    literal that Catalyst constant-folds to a single nested-array
-    object (parse ≈ 0.3 s; per-element ``F.lit`` py4j conversion takes
-    ~7 s and a 1-row crossJoin trips the no-nested-loop plan gate —
-    both rejected). This replaces the per-row ``xxhash64(bit, dim)``
-    sign derivation an earlier version used: hashing cost bits×dims
-    hash mixes per ROW; the folded matrix turns that into bits×dims
-    multiply-adds — measured 3.1× faster at sf0.1. The sign projection
-    stays one nested-HOF expression over the let-bound vector — the
-    signature stage is narrow: zero shuffle, zero join, zero Python in
-    the row path.
+    driver from a seeded RNG (:func:`_lsh_planes`) and captured in the
+    signature stage's numpy closure: one batch matmul + bit fold per
+    Arrow batch instead of rows x num_bits interpreted HOF folds (the
+    dominant cost of this operator at sf0.1). The signature stage is
+    narrow: zero shuffle, zero join. numpy's pairwise summation vs the
+    expression fold's sequential order can flip a sign only when
+    |projection| ~ 1e-13, and banding redundancy plus the exact-cosine
+    verify bound that to recall of knife-edge pairs; the expression
+    twin (``tests/twin_refs.py``) is pinned equal by pytest. Rows whose
+    vector length differs from the learned dims (NULL included) read an
+    all-zero signature — the expression form's zip_with null-pad
+    semantics — and simply bucket harmlessly.
 
     Scope note: sign-LSH needs an angular margin. Near-duplicate means
     cos ≥ ~0.9, where discrimination is strong. For low thresholds
@@ -722,131 +691,46 @@ def hyperplane_lsh_pairs(
     """
     import numpy as np
 
-    from stream_processing_platform_spark.functions.similarity import as_double_array, cosine
-    from stream_processing_platform_spark.functions.text import let
+    from stream_processing_platform_spark.functions.similarity import as_double_array
     from stream_processing_platform_spark.partitioning import ensure_min_parallelism
 
     width = num_bits // bands
-
     base = ensure_min_parallelism(df).select(
         F.col(id_col).alias("_id"), as_double_array(F.col(vec_col)).alias("_v")
     )
+    P = _lsh_planes(df, vec_col, num_bits, seed)  # (num_bits, dims) float64 +-1
+    pw = (1 << np.arange(width - 1, -1, -1)).astype(np.int64)
+    id_type = dict(base.dtypes)["_id"]
+    sig_schema = f"_id {id_type}, band int, chunk long"
 
-    # one 1-row job to learn the dimensionality (embedding columns are
-    # fixed-width; any NON-EMPTY row serves — a leading null/empty vector
-    # must not shrink the matrix to 1 dim, or every signature collapses
-    # and LSH degrades to near-all-pairs candidates). All-empty input
-    # degrades to a trivial 1-dim matrix — the pipeline then yields zero
-    # pairs instead of crashing at plan build.
-    head = (
-        df.select(F.size(as_double_array(F.col(vec_col))).alias("n"))
-        .where(F.col("n") > 0)
-        .head()
-    )
-    dims = head["n"] if head is not None else 1
-    rng = np.random.default_rng(seed)
-    planes = np.where(rng.standard_normal((num_bits, dims)) > 0, 1.0, -1.0)
-
-    if signature == "arrow":
-        # Vectorized signature stage: one batch matmul + bit fold per
-        # Arrow batch instead of rows x num_bits interpreted HOF folds
-        # (the dominant cost of this operator at sf0.1 — same treatment
-        # as _sem_members_arrow, same pairwise-vs-sequential summation
-        # acceptance: a sign flips only when |projection| ~ 1e-13, and
-        # banding redundancy plus the exact-cosine verify bound the
-        # blast radius to recall of knife-edge pairs; the expression
-        # twin is pinned equal by pytest). Rows whose vector length
-        # differs from the learned dims keep the expr-path semantics:
-        # zip_with null-pads, the fold goes null, every bit reads 0.
-        import numpy as _np
-
-        P = planes  # (num_bits, dims) float64 +-1
-        pw = (1 << _np.arange(width - 1, -1, -1)).astype(_np.int64)
-        id_type = dict(base.dtypes)["_id"]
-        sig_schema = f"_id {id_type}, band int, chunk long"
-
-        def sigrun(batches):
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
-                    continue
-                arrs = pdf["_v"].to_numpy()
-                # NULL vectors mirror the expr path (zip_with null-pads,
-                # the fold goes null, every bit reads 0): length -1
-                # never equals dims, so they fall into the all-zero row
-                lens = _np.fromiter(
-                    (len(a) if a is not None else -1 for a in arrs),
-                    dtype=_np.int64,
-                    count=n,
-                )
-                chunks = _np.zeros((n, bands), dtype=_np.int64)
-                mask = lens == P.shape[1]
-                if mask.any():
-                    X = _np.stack(arrs[mask]).astype(_np.float64, copy=False)
-                    bits = (X @ P.T > 0).astype(_np.int64)  # (m, num_bits)
-                    chunks[mask] = bits.reshape(len(X), bands, width) @ pw
-                yield pd.DataFrame(
-                    {
-                        "_id": _np.repeat(pdf["_id"].to_numpy(), bands),
-                        "band": _np.tile(_np.arange(bands, dtype=_np.int32), n),
-                        "chunk": chunks.reshape(-1),
-                    }
-                )
-
-        banded = base.select("_id", "_v").mapInPandas(sigrun, sig_schema)
-        return _lsh_verify(banded, base, threshold)
-
-    # expr path: the +-1 matrix embeds as ONE parsed SQL array literal
-    # that Catalyst constant-folds (parse ~0.3 s; per-element F.lit py4j
-    # conversion takes ~7 s and a 1-row crossJoin trips the
-    # no-nested-loop plan gate — both rejected)
-    matrix = F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join("1.0D" if v > 0 else "-1.0D" for v in row) + ")"
-            for row in planes
-        )
-        + ")"
-    )
-
-    def bits_body(v: Column) -> Column:
-        # referencing `matrix` directly lets ConstantFolding collapse it
-        # to one Literal; wrapping it in let()/a lambda variable would
-        # block folding and re-materialize the array per row
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(num_bits - 1)),
-            lambda i: F.when(
-                F.aggregate(
-                    F.zip_with(
-                        v,
-                        F.element_at(matrix, (i + 1).cast("int")),
-                        lambda x, h: x * h,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                > 0,
-                1,
-            ).otherwise(0),
-        )
-
-    fp = base.select("_id", let(F.col("_v"), bits_body).alias("_fp"))
-    banded = fp.select(
-        "_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.aggregate(
-                        F.slice(F.col("_fp"), b * width + 1, width),
-                        F.lit(0).cast("long"),
-                        lambda acc, bit: acc * 2 + bit,
-                    ).alias("chunk"),
-                ),
+    def sigrun(batches):
+        for pdf in batches:
+            n = len(pdf)
+            if n == 0:
+                continue
+            arrs = pdf["_v"].to_numpy()
+            # NULL vectors get length -1, which never equals dims, so
+            # they fall into the all-zero row
+            lens = np.fromiter(
+                (len(a) if a is not None else -1 for a in arrs),
+                dtype=np.int64,
+                count=n,
             )
-        ).alias("_bb"),
-    ).select("_id", "_bb.band", "_bb.chunk")
+            chunks = np.zeros((n, bands), dtype=np.int64)
+            mask = lens == P.shape[1]
+            if mask.any():
+                X = np.stack(arrs[mask]).astype(np.float64, copy=False)
+                bits = (X @ P.T > 0).astype(np.int64)  # (m, num_bits)
+                chunks[mask] = bits.reshape(len(X), bands, width) @ pw
+            yield pd.DataFrame(
+                {
+                    "_id": np.repeat(pdf["_id"].to_numpy(), bands),
+                    "band": np.tile(np.arange(bands, dtype=np.int32), n),
+                    "chunk": chunks.reshape(-1),
+                }
+            )
+
+    banded = base.select("_id", "_v").mapInPandas(sigrun, sig_schema)
     return _lsh_verify(banded, base, threshold)
 
 
@@ -903,7 +787,7 @@ def embedding_near_dup_pairs(
     )
 
 
-def _sem_members_arrow(
+def _sem_members(
     df: DataFrame,
     centroids: DataFrame,
     id_col: str,
@@ -911,37 +795,51 @@ def _sem_members_arrow(
     centroid_id: str,
     centroid_vec: str,
 ) -> DataFrame:
-    """Arrow/numpy twin of the expression-form member prep: ONE
-    mapInPandas pass computes the norm, the l2-normalization, and the
-    rounded-argmin cluster per Arrow batch as matmuls — instead of
+    """Cluster-assigned members for semantic dedup: (id, cluster, _v,
+    _nrm). Assignment runs over l2-NORMALIZED vectors (direction space,
+    so a scaled twin lands with its original); the returned vector and
+    norm are the ORIGINAL ones the pairwise cosine uses.
+
+    ONE mapInPandas pass computes the norm, the l2-normalization, and
+    the rounded-argmin cluster per Arrow batch as matmuls — instead of
     |rows| x |centroids| interpreted HOF dot products (measured ~5x on
     semantic dedup at sf0.1). A mapInPandas node (an operator, not an
     expression) also cannot be inlined into the downstream cluster
     join condition — a plain pandas_udf projection gets collapsed into
     the join by Catalyst and dies in codegen.
 
-    Replicates the expression form where it matters: the same
-    ``n2 - 2·dot + cn2`` composition, the same ``floor(d*1e6+0.5)/1e6``
-    rounding BEFORE the argmin, the same lowest-cid tie-break
-    (centroids sorted by cid; np.argmin takes the first minimum). The
-    admitted delta: numpy's pairwise summation vs the fold's
-    sequential order diverges ~1e-15 — nine orders of magnitude under
-    the 1e-6 rounding step, the same acceptance class as the repo's ln
-    doctrine (CLAUDE.md); the expression twin is pinned row-for-row
-    equal by pytest."""
+    Replicates the expression form (``clustering.assign_expr`` over
+    ``clustering._normed`` vectors, kept in ``tests/twin_refs.py``)
+    where it matters: the same ``n2 - 2·dot + cn2`` composition, the
+    same ``floor(d*1e6+0.5)/1e6`` rounding BEFORE the argmin, the same
+    lowest-cid tie-break (centroids sorted by cid; np.argmin takes the
+    first minimum). The admitted delta: numpy's pairwise summation vs
+    the fold's sequential order diverges ~1e-15 — nine orders of
+    magnitude under the 1e-6 rounding step, the same acceptance class
+    as the repo's ln doctrine (CLAUDE.md); the expression twin is
+    pinned row-for-row equal by pytest."""
     import numpy as np
+
+    from stream_processing_platform_spark.functions.similarity import as_double_array
+    from stream_processing_platform_spark.operators.ann import _stack_checked
+    from stream_processing_platform_spark.partitioning import ensure_min_parallelism
 
     rows = sorted(
         centroids.select(centroid_id, centroid_vec).collect(),  # bounded: k x dim
         key=lambda r: r[centroid_id],
     )
     # id/cluster types derived from the inputs (string/int ids both
-    # work — same contract as the expression twin); np.asarray keeps
-    # string cids as an object array, which fancy-indexes fine
+    # work); np.asarray keeps string cids as an object array, which
+    # fancy-indexes fine
     cids = np.asarray([r[centroid_id] for r in rows])
     C = np.ascontiguousarray([r[centroid_vec] for r in rows], dtype=np.float64)
     c_sq = (C * C).sum(axis=1)
-    id_type = dict(df.dtypes)[id_col]
+    # CPU-bound member prep — spread the single-row-group testdata scan
+    # across cores (no-op at real scale)
+    base = ensure_min_parallelism(df).select(
+        F.col(id_col), as_double_array(F.col(vec_col)).alias("_v")
+    )
+    id_type = dict(base.dtypes)[id_col]
     cluster_type = dict(centroids.dtypes)[centroid_id]
     schema = f"{id_col} {id_type}, cluster {cluster_type}, _v array<double>, _nrm double"
 
@@ -949,9 +847,7 @@ def _sem_members_arrow(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            from stream_processing_platform_spark.operators.ann import _stack_checked
-
-            X = _stack_checked(pdf, id_col, vec_col, C.shape[1])
+            X = _stack_checked(pdf, id_col, "_v", C.shape[1])
             nrm = np.sqrt((X * X).sum(axis=1))
             NV = X / nrm[:, None]
             d = (NV * NV).sum(axis=1, keepdims=True) - 2.0 * (NV @ C.T) + c_sq[None, :]
@@ -965,62 +861,7 @@ def _sem_members_arrow(
                 }
             )
 
-    return df.select(F.col(id_col), F.col(vec_col)).mapInPandas(run, schema)
-
-
-def _sem_members(
-    df: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
-    centroid_id: str,
-    centroid_vec: str,
-    assign: str = "arrow",
-) -> DataFrame:
-    """Cluster-assigned members for semantic dedup: (id, cluster, _v,
-    _nrm). Assignment runs over l2-NORMALIZED vectors (direction space,
-    so a scaled twin lands with its original); the returned vector and
-    norm are the ORIGINAL ones the pairwise cosine uses.
-
-    ``assign="arrow"`` (default) uses the vectorized mapInPandas pass
-    (:func:`_sem_members_arrow`); ``"expr"`` keeps the pure expression
-    form — the pytest twin pinning the two equal. On the expr path,
-    ``_normed`` binds the norm once via let() — an inline norm inside
-    the transform lambda would re-fold the array per element."""
-    from stream_processing_platform_spark.functions.similarity import as_double_array, dot
-    from stream_processing_platform_spark.operators.clustering import _normed, assign_expr
-    from stream_processing_platform_spark.partitioning import ensure_min_parallelism
-
-    # CPU-bound member prep (matmuls / HOF folds) — spread the
-    # single-row-group testdata scan across cores (no-op at real scale)
-    base = ensure_min_parallelism(df).select(
-        F.col(id_col), as_double_array(F.col(vec_col)).alias("_v")
-    )
-    if assign == "arrow":
-        return _sem_members_arrow(
-            base, centroids, id_col, "_v", centroid_id, centroid_vec
-        )
-    normed = base.select(
-        F.col(id_col),
-        F.col("_v").alias("_v"),
-        _normed(F.col("_v")).alias("_nv"),
-    )
-    assigned = assign_expr(
-        normed.select(id_col, "_nv"),
-        centroids,
-        id_col=id_col,
-        vec_col="_nv",
-        centroid_id=centroid_id,
-        centroid_vec=centroid_vec,
-    ).select(id_col, "cluster")
-    # per-row norm precomputed once (CLAUDE.md: a Column referenced k
-    # times is evaluated k times — never recompute norms per pair)
-    return assigned.join(normed.select(id_col, "_v"), id_col).select(
-        F.col(id_col),
-        F.col("cluster"),
-        F.col("_v"),
-        F.sqrt(dot(F.col("_v"), F.col("_v"))).alias("_nrm"),
-    )
+    return base.select(F.col(id_col), F.col("_v")).mapInPandas(run, schema)
 
 
 def _cos_r(va, na, vb, nb):
@@ -1039,7 +880,6 @@ def semantic_dedup(
     centroid_id: str = "cid",
     centroid_vec: str = "cvec",
     threshold: float = 0.95,
-    assign: str = "arrow",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication by clustering embeddings, then dropping any vector
@@ -1053,19 +893,25 @@ def semantic_dedup(
     Determinism/oracle shape: vectors are l2-normalized FIRST (so the
     cluster assignment follows direction, like the paper's
     cosine-space clustering — a scaled twin lands with its original),
-    assignment is the expression-form argmin of
-    ``operators/clustering.py::assign_expr`` (min(struct(dist, cid)),
-    map-side combining), and the in-cluster cosine is computed over
-    the ORIGINAL vectors with per-row precomputed norms, rounded via
-    the ``floor(x*1e6+0.5)/1e6`` IEEE form before the threshold
-    compare. Keep policy is lowest-id-wins per pair — deterministic
+    assignment is the rounded argmin of :func:`_sem_members` (the
+    vectorized form of ``operators/clustering.py::assign_expr``), and
+    the in-cluster cosine is computed over the ORIGINAL vectors with
+    per-row precomputed norms, rounded via the ``floor(x*1e6+0.5)/1e6``
+    IEEE form before the threshold compare. Keep policy is lowest-id-wins per pair — deterministic
     and SQL-expressible (the paper keeps the point farthest from the
     centroid; the policy choice doesn't change the pair structure).
 
     Output: ``id_col``, ``cluster`` (centroid id), ``kept`` boolean —
     one row per input vector, no nullable columns.
     """
-    members = _sem_members(df, centroids, id_col, vec_col, centroid_id, centroid_vec, assign)
+    members = _sem_members(df, centroids, id_col, vec_col, centroid_id, centroid_vec)
+    return _drop_cluster_dups(members, id_col, threshold)
+
+
+def _drop_cluster_dups(members: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """SemDeDup keep stage over assigned members (id, cluster, _v,
+    _nrm): drop any member with a lower-id same-cluster neighbor at
+    rounded cosine >= ``threshold``. Output: id_col, cluster, kept."""
     a = members.select(
         F.col(id_col).alias("_ida"), F.col("cluster").alias("_cl"),
         F.col("_v").alias("_va"), F.col("_nrm").alias("_na"),
@@ -1097,7 +943,6 @@ def incremental_semantic_dedup(
     centroid_id: str = "cid",
     centroid_vec: str = "cvec",
     threshold: float = 0.95,
-    assign: str = "arrow",
 ) -> DataFrame:
     """Steady-state SemDeDup ingestion: an incoming batch is checked
     against the already-deduplicated corpus AND itself, never
@@ -1123,9 +968,9 @@ def incremental_semantic_dedup(
     # tie-ordered self-join side, the final keep join) — materialize
     # once or each re-runs the Arrow assignment pass over the batch
     inc = checkpointer(incoming)(
-        _sem_members(incoming, centroids, id_col, vec_col, centroid_id, centroid_vec, assign)
+        _sem_members(incoming, centroids, id_col, vec_col, centroid_id, centroid_vec)
     )
-    ex = _sem_members(existing_kept, centroids, id_col, vec_col, centroid_id, centroid_vec, assign)
+    ex = _sem_members(existing_kept, centroids, id_col, vec_col, centroid_id, centroid_vec)
     b = inc.select(
         F.col(id_col).alias("_idb"), F.col("cluster").alias("_cl"),
         F.col("_v").alias("_vb"), F.col("_nrm").alias("_nb"),

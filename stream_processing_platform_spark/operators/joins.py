@@ -122,29 +122,34 @@ def as_of_join(
     before (``backward``) / at-or-after (``forward``) its timestamp.
 
     Not in the reference; standard in time-series engines. Implemented as
-    range join + row_number picking rank 1 per left row — one shuffle on
-    the equi keys, then a per-group top-1 (no driver state).
+    :func:`interval_join` + a per-left-row argmax: ``max(struct(key,
+    right columns…))`` grouped by the left columns, with key = right ts
+    (backward) or -right ts (forward). The aggregate combines map-side
+    — no window sort over the join expansion — and after a shuffle join
+    the equi-key partitioning already satisfies the grouping.
+    Deterministic: a tie on the right ts goes to the largest remaining
+    right columns in column order. A left row is identified by its full
+    content, so exact-duplicate left rows yield one output row. Inner
+    semantics: left rows with no match inside the tolerance are dropped.
+    Column names other than ``on`` must be distinct across the two sides
+    (alias before the call).
     """
-    from pyspark.sql import Window
-
     if direction == "backward":
-        lower, upper = (-(tolerance_ms or 2**62)), 0
-        order = F.col("_r_ts").desc()
+        lower, upper, key = -(tolerance_ms or 2**62), 0, F.col(right_ts_ms)
     elif direction == "forward":
-        lower, upper = 0, (tolerance_ms or 2**62)
-        order = F.col("_r_ts").asc()
+        lower, upper, key = 0, tolerance_ms or 2**62, -F.col(right_ts_ms)
     else:
         raise ValueError(f"unknown direction {direction!r}")
 
-    lft = left.withColumn("_l_id", F.monotonically_increasing_id())
-    rgt = right.withColumnRenamed(right_ts_ms, "_r_ts") if right_ts_ms != "_r_ts" else right
-    joined = interval_join(lft, rgt, on, left_ts_ms, "_r_ts", lower, upper)
-    w = Window.partitionBy("_l_id").orderBy(order)
+    # by name, not right[c]: in a self-join (both sides derived from one
+    # DataFrame) the dataset-tagged references resolve to the wrong side
+    rest = [c for c in right.columns if c not in on]
+    best = F.max(F.struct(key.alias("_k"), *[F.col(c) for c in rest]))
     return (
-        joined.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "_l_id")
-        .withColumnRenamed("_r_ts", right_ts_ms)
+        interval_join(left, right, on, left_ts_ms, right_ts_ms, lower, upper)
+        .groupBy(*left.columns)
+        .agg(best.alias("_best"))
+        .select(*left.columns, *[F.col("_best")[c].alias(c) for c in rest])
     )
 
 

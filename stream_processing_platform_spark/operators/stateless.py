@@ -14,24 +14,8 @@ query wants it (SURVEY.md §7 risk #4).
 
 from __future__ import annotations
 
-from collections.abc import Mapping
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def map_columns(df: DataFrame, exprs: Mapping[str, Column]) -> DataFrame:
-    """MapOperator: 1→1 transform expressed as named column expressions.
-
-    ``exprs`` maps output-column name → Column expression; stays entirely
-    inside whole-stage codegen.
-    """
-    return df.withColumns(dict(exprs))
-
-
-def project(df: DataFrame, *cols: Column | str) -> DataFrame:
-    """Projection with explicit column list (enables parquet column pruning)."""
-    return df.select(*cols)
 
 
 def filter_rows(df: DataFrame, predicate: Column) -> DataFrame:

@@ -38,16 +38,8 @@ def union_all(*dfs: DataFrame) -> DataFrame:
     return out
 
 
-def union_distinct(*dfs: DataFrame) -> DataFrame:
-    return union_all(*dfs).distinct()
-
-
 def intersect(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.intersect(b)
-
-
-def except_all_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.exceptAll(b).distinct()
 
 
 def minus(a: DataFrame, b: DataFrame) -> DataFrame:

@@ -53,21 +53,6 @@ class UnigramVocab:
     scores: dict[str, int]
 
 
-def gram_count_frame(docs: DataFrame, text_col: str, length: int) -> DataFrame:
-    """(gram, cnt) for all substrings of ``length`` — one explode + one
-    gram-keyed map-side-combined count."""
-    txt = F.lower(F.col(text_col))
-    grams = docs.where(F.length(txt) >= length).select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.length(txt) - length + 1),
-                lambda i: txt.substr(i, F.lit(length)),
-            )
-        ).alias("gram")
-    )
-    return grams.groupBy("gram").agg(F.count("*").alias("cnt"))
-
-
 def induce_vocab(docs: DataFrame, text_col: str = "text", top_k: int = 500) -> UnigramVocab:
     """Frequency-seeded vocab: ALL 1-grams + top_k of each length 2..4
     (count desc, gram asc), scores on the 1e-6 log-prob grid.

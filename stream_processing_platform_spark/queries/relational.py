@@ -662,15 +662,10 @@ def q_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("click_id"), "user_id", F.col("ts_ms").alias("click_ms")
     )
     purchases = e.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user_id"),
-        F.col("ts_ms").alias("purchase_ms"),
+        F.col("event_id").alias("purchase_id"), "user_id", F.col("ts_ms").alias("purchase_ms")
     )
-    joined = clicks.join(
-        purchases,
-        (clicks.user_id == purchases.p_user_id)
-        & (purchases.purchase_ms >= clicks.click_ms)
-        & (purchases.purchase_ms <= clicks.click_ms + 1_800_000),
+    joined = joins.interval_join(
+        clicks, purchases, ["user_id"], "click_ms", "purchase_ms", 0, 1_800_000
     )
     return joined.select(
         "click_id",
@@ -708,22 +703,12 @@ def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("purchase_id"), "user_id", F.col("ts_ms").alias("p_ms")
     )
     clicks = e.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("ts_ms").alias("c_ms"),
+        F.col("event_id").alias("click_id"), "user_id", F.col("ts_ms").alias("c_ms")
     )
-    joined = purchases.join(
-        clicks,
-        (purchases.user_id == clicks.c_user)
-        & (clicks.c_ms <= purchases.p_ms)
-        & (clicks.c_ms >= purchases.p_ms - 3_600_000),
-    )
-    w = Window.partitionBy("purchase_id").orderBy(F.col("c_ms").desc(), F.col("click_id").desc())
-    return (
-        joined.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("purchase_id", "click_id", (F.col("p_ms") - F.col("c_ms")).alias("gap_ms"))
-    )
+    # tie on c_ms -> larger click_id (the argmax struct is (c_ms, click_id))
+    return joins.as_of_join(
+        purchases, clicks, ["user_id"], "p_ms", "c_ms", tolerance_ms=3_600_000
+    ).select("purchase_id", "click_id", (F.col("p_ms") - F.col("c_ms")).alias("gap_ms"))
 
 
 _PRICE_BANDS = [

@@ -865,7 +865,7 @@ _WINNOW_K, _WINNOW_W = 12, 6
 
 
 def _sql_gram_hash(j_expr: str, k: int) -> str:
-    """duckdb twin of functions.text._poly_gram_hash: the same
+    """duckdb twin of the functions.text gram hash: the same
     fixed-power polynomial over the codepoint list, per-term mod, chars
     past the end contributing 0 (codes[out-of-range] is NULL)."""
     from stream_processing_platform_spark.functions.text import (

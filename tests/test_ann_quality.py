@@ -147,12 +147,12 @@ def test_hyperplane_lsh_leading_empty_vector_keeps_dims(spark):
 
 
 def test_arrow_twins_name_null_and_ragged_vectors(spark):
-    """The Arrow assignment/encoding twins (_assign_cells, _encode_codes,
-    _sem_members_arrow) stack each batch with np.stack: a NULL or
+    """The Arrow assignment/encoding stages (_assign_cells, _encode_codes,
+    _sem_members) stack each batch with np.stack: a NULL or
     wrong-length embedding used to die with an opaque numpy shape error
     deep in an executor. The contract is now a loud, named error (the
-    LSH sigrun masks such rows only because its expression twin defines
-    all-zero semantics for them; these twins have none)."""
+    LSH signature stage masks such rows only because its expression twin
+    defines all-zero semantics for them; these stages have none)."""
     from stream_processing_platform_spark.operators.ann import ivf_topk
     from stream_processing_platform_spark.operators.dedup import semantic_dedup
 
@@ -177,10 +177,8 @@ def test_simhash_arrow_signature_equals_expr(spark, sf_dir):
     the semdedup/PQ twins): real corpus + adversarial strings (empty,
     whitespace-only, ASCII-control whitespace, 16+-token runs)."""
     from stream_processing_platform_spark.functions.text import tokens as tok_fn
-    from stream_processing_platform_spark.operators.dedup import (
-        _simhash_bits_arrow,
-        simhash_bits,
-    )
+    from stream_processing_platform_spark.operators.dedup import _simhash_bits_arrow
+    from tests.twin_refs import simhash_bits
 
     def both_equal(df):
         arrow = _simhash_bits_arrow(df, "doc_id", "text", 64)
@@ -502,6 +500,7 @@ def test_semdedup_arrow_assignment_matches_expression_twin(spark, sf_dir):
     from stream_processing_platform_spark.operators.clustering import _normed
     from stream_processing_platform_spark.operators.dedup import semantic_dedup
     from stream_processing_platform_spark.queries.similarity import _augmented
+    from tests.twin_refs import semantic_dedup_expr
 
     aug = _augmented(spark, sf_dir)
     cents = aug.where((F.col("vec_id") % 61) == 3).select(
@@ -510,11 +509,11 @@ def test_semdedup_arrow_assignment_matches_expression_twin(spark, sf_dir):
     )
     arrow = {
         r.vec_id: (r.cluster, r.kept)
-        for r in semantic_dedup(aug, cents, threshold=0.95, assign="arrow").collect()
+        for r in semantic_dedup(aug, cents, threshold=0.95).collect()
     }
     expr = {
         r.vec_id: (r.cluster, r.kept)
-        for r in semantic_dedup(aug, cents, threshold=0.95, assign="expr").collect()
+        for r in semantic_dedup_expr(aug, cents, threshold=0.95).collect()
     }
     assert arrow == expr
 
@@ -528,15 +527,16 @@ def test_hyperplane_lsh_arrow_signature_matches_expression_twin(spark, sf_dir):
     means any divergence is a bug."""
     from stream_processing_platform_spark.operators.dedup import hyperplane_lsh_pairs
     from stream_processing_platform_spark.queries.similarity import _augmented
+    from tests.twin_refs import hyperplane_lsh_pairs_expr
 
     aug = _augmented(spark, sf_dir)
     arrow = {
         (r.id_a, r.id_b, r.cos)
-        for r in hyperplane_lsh_pairs(aug, "vec_id", "embedding", signature="arrow").collect()
+        for r in hyperplane_lsh_pairs(aug, "vec_id", "embedding").collect()
     }
     expr = {
         (r.id_a, r.id_b, r.cos)
-        for r in hyperplane_lsh_pairs(aug, "vec_id", "embedding", signature="expr").collect()
+        for r in hyperplane_lsh_pairs_expr(aug, "vec_id", "embedding").collect()
     }
     assert arrow == expr and len(arrow) > 0
 
@@ -554,6 +554,7 @@ def test_pq_encode_arrow_matches_expression_twin(spark, sf_dir):
         _pq_codebook,
         _prep,
     )
+    from tests.twin_refs import encode_codes_expr
 
     emb = load_table(spark, sf_dir, "embeddings")
     c = _prep(emb, "vec_id", "embedding", "neighbor_id", "_cv")
@@ -561,14 +562,12 @@ def test_pq_encode_arrow_matches_expression_twin(spark, sf_dir):
     for normalize in (True, False):
         arrow = {
             r.neighbor_id: list(r.codes)
-            for r in _encode_codes(
-                c, "neighbor_id", "_cv", cb, 64, 16, normalize, encode="arrow"
-            ).collect()
+            for r in _encode_codes(c, "neighbor_id", "_cv", cb, normalize).collect()
         }
         expr = {
             r.neighbor_id: list(r.codes)
-            for r in _encode_codes(
-                c, "neighbor_id", "_cv", cb, 64, 16, normalize, encode="expr"
+            for r in encode_codes_expr(
+                c, "neighbor_id", "_cv", cb, 64, 16, normalize
             ).collect()
         }
         assert arrow == expr, f"normalize={normalize}"
@@ -583,43 +582,44 @@ def test_ivf_assign_cells_arrow_matches_expression_twin(spark, sf_dir):
         _ivf_centroids,
         _prep,
     )
+    from tests.twin_refs import assign_cells_expr
 
     emb = load_table(spark, sf_dir, "embeddings")
     c = _prep(emb, "vec_id", "embedding", "cid", "_cv")
     cents = _ivf_centroids(c, 16, 0)
     arrow = {
-        r.cid: r.cell for r in _assign_cells(c, cents, assign="arrow").collect()
+        r.cid: r.cell for r in _assign_cells(c, cents).collect()
     }
     expr = {
-        r.cid: r.cell for r in _assign_cells(c, cents, assign="expr").collect()
+        r.cid: r.cell for r in assign_cells_expr(c, cents).collect()
     }
     assert arrow == expr and len(arrow) == emb.count()
 
 
 def test_hyperplane_lsh_null_vector_is_bucketed_not_fatal(spark):
     """A NULL embedding must not kill the Arrow signature stage — it
-    reads an all-zero signature (the expr path's zip_with null-pad
+    reads an all-zero signature (the expression twin's zip_with null-pad
     semantics) and simply buckets harmlessly; the verify stage never
     emits it as a pair."""
     from stream_processing_platform_spark.operators.dedup import hyperplane_lsh_pairs
+    from tests.twin_refs import hyperplane_lsh_pairs_expr
 
     rows = [(1, [1.0] * 8), (2, [1.0] * 8), (3, None), (4, [])]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    for sig in ("arrow", "expr"):
+    for impl in (hyperplane_lsh_pairs, hyperplane_lsh_pairs_expr):
         pairs = {
             (r.id_a, r.id_b)
-            for r in hyperplane_lsh_pairs(
-                df, "vec_id", "embedding", threshold=0.95, signature=sig
-            ).collect()
+            for r in impl(df, "vec_id", "embedding", threshold=0.95).collect()
         }
-        assert pairs == {(1, 2)}, sig
+        assert pairs == {(1, 2)}, impl.__name__
 
 
 def test_semantic_dedup_string_ids(spark):
     """The Arrow member prep derives id/cluster types from its inputs —
-    string document ids (the common real-world key) work on both
-    paths."""
+    string document ids (the common real-world key) work on it and on
+    the expression twin."""
     from stream_processing_platform_spark.operators.dedup import semantic_dedup
+    from tests.twin_refs import semantic_dedup_expr
 
     cents = spark.createDataFrame(
         [("a", [1.0, 0.0]), ("b", [0.0, 1.0])], "cid string, cvec array<double>"
@@ -628,10 +628,10 @@ def test_semantic_dedup_string_ids(spark):
         [("d1", [2.0, 0.0]), ("d2", [2.0, 0.1]), ("d3", [0.0, 3.0])],
         "vec_id string, embedding array<double>",
     )
-    for mode in ("arrow", "expr"):
+    for impl in (semantic_dedup, semantic_dedup_expr):
         res = {
             r.vec_id: (r.cluster, r.kept)
-            for r in semantic_dedup(df, cents, threshold=0.95, assign=mode).collect()
+            for r in impl(df, cents, threshold=0.95).collect()
         }
         assert res["d1"] == ("a", True)
         assert res["d2"] == ("a", False)  # lower-id neighbor d1, cos ~0.999

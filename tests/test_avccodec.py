@@ -77,6 +77,29 @@ def test_cavlc_residual_roundtrip_all_nc_classes():
         assert got == coeffs, (nC, max_c, coeffs, got)
 
 
+def test_cavlc_level_prefix_overflow_raises():
+    """A corrupt level_prefix longer than 32 zero bits is a typed
+    ValueError — also when the zero run ends inside the 16-bit window
+    that follows two all-zero windows (prefix 34), not only after an
+    all-zero window."""
+    bw = A.BitWriter()
+    A.encode_residual_block(bw, [2] + [0] * 15, 0, 16)
+    bw.u(1, 1)
+    bw.align_zero()
+    br = A.BitReader(bw.getvalue())
+    assert A._read_coeff_token(br, 0) == (1, 0)  # one non-trailing-one level
+    token_len = br.pos
+    bad = A.BitWriter()
+    bad.u(A.BitReader(bw.getvalue()).u(token_len), token_len)
+    bad.u(0, 16)
+    bad.u(0, 16)
+    bad.u(0b001, 3)  # 32 zero bits + a short zero run: prefix 34
+    bad.u(0xFFFF, 16)
+    bad.align_zero()
+    with pytest.raises(ValueError, match="level prefix overflow"):
+        A.decode_residual_block(A.BitReader(bad.getvalue()), 0, 16)
+
+
 def test_exp_golomb_and_rbsp_escaping():
     bw = A.BitWriter()
     vals = [0, 1, 2, 7, 255, 100000]

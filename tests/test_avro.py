@@ -131,6 +131,22 @@ def test_columnar_block_decode_pins_row_path(tmp_path):
         assert got == list(read_ocf(p)) == rows
 
 
+def test_decoder_cache_evicts_only_the_oldest(monkeypatch):
+    """At the 64-entry cap, compiling a new schema's decoder evicts the
+    oldest compiled decoder, not the whole cache."""
+    from stream_processing_platform_spark.sources import avrocodec
+
+    monkeypatch.setattr(avrocodec, "_DEC_CACHE", {})
+    keys = []
+    for n in range(1, 66):  # 65 distinct schemas: n long fields each
+        fields = [(f"f{i}", "long") for i in range(n)]
+        avrocodec._block_column_decoder(fields)
+        keys.append(tuple(t for _, t in fields))
+    assert len(avrocodec._DEC_CACHE) == 64
+    assert keys[0] not in avrocodec._DEC_CACHE
+    assert all(k in avrocodec._DEC_CACHE for k in keys[-63:])
+
+
 def test_bad_magic_and_corrupt_sync_raise(tmp_path):
     p = str(tmp_path / "bad.avro")
     with open(p, "wb") as f:

@@ -83,16 +83,13 @@ def test_embedding_near_dup_matrix_constant_folds(spark, sf_dir):
     someone wraps it in let()/a lambda variable again) it re-materializes
     per row, a 10x signature regression. The registered query runs the
     Arrow signature path (matrix lives in the numpy closure, not the
-    plan); this gate pins the EXPRESSION twin, which the Arrow path is
-    pytest-pinned equal to."""
-    from pyspark.sql import functions as F
-
-    from stream_processing_platform_spark.operators.dedup import hyperplane_lsh_pairs
+    plan); this gate pins the EXPRESSION twin in tests/twin_refs.py,
+    which the Arrow path is pytest-pinned equal to."""
     from stream_processing_platform_spark.queries.similarity import _augmented
+    from tests.twin_refs import hyperplane_lsh_pairs_expr
 
-    df = hyperplane_lsh_pairs(
-        _augmented(spark, sf_dir), "vec_id", "embedding",
-        threshold=0.95, signature="expr",
+    df = hyperplane_lsh_pairs_expr(
+        _augmented(spark, sf_dir), "vec_id", "embedding", threshold=0.95
     )
     plan = _optimized(df)
     assert plan.count("1.0D") < 100, "hyperplane literals not constant-folded"

@@ -82,6 +82,43 @@ def test_salted_join_row_identical_to_plain_join(spark, sf_dir):
     assert plain.exceptAll(salted).count() == 0
 
 
+def test_as_of_join_directions_tolerance_and_ties(spark):
+    """Backward picks the latest right row at-or-before the left ts,
+    forward the earliest at-or-after; the tolerance bounds the gap; a
+    tie on the right ts goes to the largest remaining right column; a
+    left row with no match is dropped. Both sides derive from one
+    DataFrame (the self-join shape q_join_asof uses)."""
+    import pytest
+
+    from stream_processing_platform_spark.operators.joins import as_of_join
+
+    e = spark.createDataFrame(
+        [
+            (1, "a", 100, "p"), (2, "a", 90, "c"), (3, "a", 90, "c"),
+            (4, "a", 30, "c"), (5, "b", 10, "p"), (6, "b", 20, "c"),
+            (7, "a", 200, "p"),
+        ],
+        "event_id long, user_id string, ts long, kind string",
+    )
+    p = e.where(F.col("kind") == "p").select(
+        F.col("event_id").alias("pid"), "user_id", F.col("ts").alias("p_ts")
+    )
+    c = e.where(F.col("kind") == "c").select(
+        F.col("event_id").alias("cid"), "user_id", F.col("ts").alias("c_ts")
+    )
+
+    def run(**kw):
+        out = as_of_join(p, c, ["user_id"], "p_ts", "c_ts", **kw)
+        assert out.columns == ["pid", "user_id", "p_ts", "cid", "c_ts"]
+        return {r.pid: (r.cid, r.c_ts) for r in out.collect()}
+
+    assert run() == {1: (3, 90), 7: (3, 90)}
+    assert run(tolerance_ms=50) == {1: (3, 90)}
+    assert run(direction="forward") == {5: (6, 20)}
+    with pytest.raises(ValueError):
+        run(direction="sideways")
+
+
 def test_exact_percentiles_refuses_unbounded_buffer(spark, sf_dir):
     """The composite-key guard (operators/percentiles.py): an exact
     percentile with no grouping key buffers the whole input in one agg

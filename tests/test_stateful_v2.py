@@ -27,7 +27,6 @@ from pyspark.sql.types import (
 
 from stream_processing_platform_spark.sources.streaming import file_source
 from stream_processing_platform_spark.streaming.stateful_v2 import (
-
     ROCKSDB_PROVIDER,
     RunningStatsProcessor,
     requires_state_v2_runtime,

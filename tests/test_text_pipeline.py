@@ -229,10 +229,8 @@ def test_winnow_arrow_path_equals_declarative_expr(spark, sf_dir):
     two implementations of the same polynomial-hash winnowing; they
     must produce identical print SETS per document (the declarative
     twin is the reference semantics the duckdb oracle mirrors)."""
-    from stream_processing_platform_spark.functions.text import (
-        winnow_fingerprints,
-        winnow_fingerprints_expr,
-    )
+    from stream_processing_platform_spark.functions.text import winnow_fingerprints
+    from tests.twin_refs import winnow_fingerprints_expr
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200)
     both = d.select(
@@ -256,10 +254,8 @@ def test_gram_hashes_arrow_equals_expr(spark, sf_dir):
     """gram_hashes (Arrow, position-ordered — substring-span dedup's
     input) must equal its declarative HOF twin element-for-element,
     including clipped short docs and empties."""
-    from stream_processing_platform_spark.functions.text import (
-        gram_hashes,
-        gram_hashes_expr,
-    )
+    from stream_processing_platform_spark.functions.text import gram_hashes
+    from tests.twin_refs import gram_hashes_expr
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200)
     both = d.select(
